@@ -197,7 +197,7 @@ def entity_alert_stream(events: DataFrame, grace: str = "120 seconds") -> DataFr
     ``.writeStream`` (Kafka via :func:`kafka_alert_sink`)."""
     from pulseboard_spark.streaming.stateful import alert_rules_stateful
 
-    prepared = with_dedup(with_admission(events, grace), ["event_id"]).drop("is_late")
+    prepared = with_dedup(with_admission(events, grace), ["event_id"])
     return alert_rules_stateful(prepared, set_watermark=False)
 
 
@@ -327,7 +327,7 @@ def sized_session(spark: SparkSession, state_partitions: int) -> SparkSession:
     shape: profile-grained queries (~7 active key-groups per batch) drop
     from p95 ≈5 s to 1.8 s at 8 partitions — their floor at 32 was pure
     task-scheduling overhead over empty partitions — while the rules
-    query (thousands of (entity, type) groups per batch) needs the
+    query (thousands of key groups per batch) needs the
     parallelism and degrades 4.9 s → 9.1 s if starved.  Rule: size each
     query's count to its active-group count per batch.
 

@@ -5,8 +5,8 @@ All operators here are ``applyInPandasWithState`` (Arrow-batched keyed
 state):
 
 * :func:`alert_rules_stateful` — the streaming twin of the reference's
-  WindowStore + Rules loop (`ingest/Processor.kt:79-128`): per
-  (entity_id, type) it keeps the trailing point buffer + EWMA state and
+  WindowStore + Rules loop (`ingest/Processor.kt:79-128`): per entity_id
+  it keeps each event type's trailing point buffer + EWMA state and
   evaluates R1/R2/R4 per arriving event.  Exactly the batch semantics
   (operators/rules.py) when events arrive in event-time order — the
   equivalence is pinned by tests/test_streaming.py.
@@ -18,10 +18,15 @@ state):
   :func:`reengage_stateful` — the CDP apply loop, G4 membership diff
   (`cdp/segments/SegmentEngine.kt:79-119`), and the W10 inactivity timer.
 
-State is bounded: point buffers prune to the largest rule window (1 h;
+Point buffers are bounded: they prune to the largest rule window (1 h;
 reference horizon is 5 m — `core/WindowStore.kt:46-49` — we keep 1 h
-because R4's avg_1h needs it), so per-key state is O(events/hour), evicted
-by watermark downstream.
+because R4's avg_1h needs it), so each key's buffer is O(events/hour).
+Keys themselves are not: the rule and R3 operators run with
+``GroupStateTimeout.NoTimeout``, so a key's state row stays in the store
+once created and the state grows with the number of distinct entities.
+That is deliberate for the rules: R2's EWMA is unbounded in time in the
+batch twin (operators/ewma.py scans each key's whole history), so
+evicting an idle key would reset its EWMA and diverge from batch.
 """
 
 from __future__ import annotations
@@ -43,22 +48,22 @@ HORIZON_US = 3600 * US  # largest trailing window (avg_1h)
 ALERT_SCHEMA = (
     "rule string, entity_id string, ts_ms bigint, severity string, event_id bigint"
 )
-_RULE_STATE_SCHEMA = "ts_us array<long>, value array<double>, ewma double, has_ewma boolean"
-
-
-def _severity(value: float, threshold: float) -> str:
-    if threshold <= 0:
-        return "HIGH"
-    ratio = value / threshold
-    if ratio >= 10.0:
-        return "HIGH"
-    if ratio >= 5.0:
-        return "MEDIUM"
-    return "LOW"
+# One row per entity.  Per-type sub-state sits in parallel arrays indexed by
+# the slot in ``types``; the trailing points of every type share one buffer,
+# tagged by slot (``pt_type``) and sorted by (slot, ts_us).
+_RULE_STATE_SCHEMA = (
+    "types array<string>, ewma array<double>, has_ewma array<boolean>, "
+    "pt_type array<int>, ts_us array<long>, value array<double>"
+)
+# The only columns _eval_rules reads; selected before the shuffle so the
+# Python worker never converts ts, geo or device.
+_RULE_INPUT = ["entity_id", "type", "ts_us", "ts_ms", "event_id", "value", "profile"]
+# Trailing windows, in the order _eval_rules unpacks them.
+_WINDOWS_US = np.array([60, 300, 3600, 30], dtype=np.int64) * US
 
 
 def _sev_vec(value: np.ndarray, thr: np.ndarray) -> np.ndarray:
-    """Vectorized R5 severity ladder; matches _severity element-wise."""
+    """Vectorized R5 severity ladder (the batch twin's, operators/rules.py)."""
     safe = np.where(thr > 0, thr, 1.0)
     ratio = value / safe
     out = np.where(ratio >= 10.0, "HIGH", np.where(ratio >= 5.0, "MEDIUM", "LOW"))
@@ -66,91 +71,142 @@ def _sev_vec(value: np.ndarray, thr: np.ndarray) -> np.ndarray:
 
 
 def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Per (entity_id, type): replay arriving events in (ts, event_id) order
-    against the trailing-window buffer, emitting fired R1/R2/R4 rows.
+    """Per entity_id: replay each event type's arriving events in
+    (ts, event_id) order against that type's trailing-window buffer and
+    EWMA, emitting fired R1/R2/R4 rows.
 
-    Fully vectorized: the merged buffer stays sorted, so every event's
-    trailing range is one batched searchsorted pair + prefix-sum lookup,
-    clipped to the points processed so far (``upto`` — append-before-eval
-    order).  The only sequential piece is the EWMA recurrence, a bare
+    One lexsort orders buffer + batch by (type slot, ts), buffered points
+    before new ones on equal ts, so every type is a contiguous sorted
+    segment.  Per type present in the batch, one searchsorted answers all
+    four trailing windows plus the upper edge, clipped to the points
+    processed so far (``upto`` — append-before-eval order), and prefix sums
+    restart at the segment so window sums match the per-type arithmetic
+    bit for bit.  The only sequential piece is the EWMA recurrence, a bare
     multiply-add per non-null value (kept as a scalar loop for bit-exact
-    parity with the batch twin's scan — operators/ewma.py)."""
-    entity_id, etype = key
+    parity with the batch twin's scan — operators/ewma.py).  Types absent
+    from the batch keep their buffer and EWMA unchanged."""
+    (entity_id,) = key
     if state.exists:
-        ts_list, val_list, ewma, has_ewma = state.get
-        buf_ts = np.array(ts_list, dtype=np.int64)
-        buf_val = np.array(val_list, dtype=np.float64)
+        types, ewma, has_ewma, buf_type, buf_ts, buf_val = state.get
+        types, ewma, has_ewma = list(types), list(ewma), list(has_ewma)
     else:
-        buf_ts = np.empty(0, dtype=np.int64)
-        buf_val = np.empty(0, dtype=np.float64)
-        ewma, has_ewma = 0.0, False
+        types, ewma, has_ewma, buf_type, buf_ts, buf_val = [], [], [], [], [], []
+    base = len(buf_ts)
 
-    batch = pd.concat(list(pdfs), ignore_index=True).sort_values(["ts_us", "event_id"], kind="mergesort")
+    chunks = list(pdfs)
+    batch = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     n = len(batch)
-
     n_ts = batch["ts_us"].to_numpy(np.int64)
     n_val = batch["value"].to_numpy(np.float64)
     n_eid = batch["event_id"].to_numpy(np.int64)
-    n_tsms = batch["ts_ms"].to_numpy(np.int64)
-    profile = batch["profile"].to_numpy()
 
-    all_ts = np.concatenate([buf_ts, n_ts])
-    all_val = np.concatenate([buf_val, n_val])
-    order = np.argsort(all_ts, kind="mergesort")
-    all_ts, all_val = all_ts[order], all_val[order]
-    # Null-value events (NaN) stay IN the buffer — they count toward the
-    # event rate (batch rate_1m counts all rows) — but are SKIPPED by the
-    # value aggregates, exactly like the batch twin's sum(v)/count(v): a
-    # raw cumsum would let one NaN poison every later window sum for the
-    # key (found by tests/test_fuzz_rules.py).
-    valid_all = ~np.isnan(all_val)
-    csum = np.concatenate([[0.0], np.cumsum(np.where(valid_all, all_val, 0.0))])
-    vcnt = np.concatenate([[0], np.cumsum(valid_all.astype(np.int64))])
+    # map the batch's types onto state slots, opening slots for new types
+    codes, uniq = pd.factorize(batch["type"].to_numpy())
+    uniq = uniq.tolist()
+    if (codes < 0).any():  # a null type is its own key, as in the batch twin's partitioning
+        codes[codes < 0] = len(uniq)
+        uniq.append(None)
+    slot_of = {t: i for i, t in enumerate(types)}
+    lut = np.empty(len(uniq), dtype=np.int64)
+    for j, t in enumerate(uniq):
+        if t not in slot_of:
+            slot_of[t] = len(types)
+            types.append(t)
+            ewma.append(0.0)
+            has_ewma.append(False)
+        lut[j] = slot_of[t]
 
-    base = len(buf_ts)
-    upto = base + np.arange(1, n + 1)  # points processed so far, current included
+    all_type = np.concatenate([np.asarray(buf_type, dtype=np.int64), lut[codes]])
+    all_ts = np.concatenate([np.asarray(buf_ts, dtype=np.int64), n_ts])
+    all_val = np.concatenate([np.asarray(buf_val, dtype=np.float64), n_val])
+    is_new = np.arange(base + n) >= base
+    tie = np.concatenate([np.arange(base), n_eid])  # buffer order, then event_id
+    order = np.lexsort((tie, is_new, all_ts, all_type))
+    s_type, s_ts, s_val, s_new = all_type[order], all_ts[order], all_val[order], is_new[order]
+    src = order[s_new] - base  # batch row of each new event, in sorted order
 
-    def win(dur_us: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(all-row count, null-skipped sum, non-null count) per event."""
-        lo = np.minimum(np.searchsorted(all_ts, n_ts - dur_us, side="left"), upto)
-        hi = np.minimum(np.searchsorted(all_ts, n_ts, side="right"), upto)
-        return hi - lo, csum[hi] - csum[lo], vcnt[hi] - vcnt[lo]
+    cuts = np.flatnonzero(np.diff(s_type)) + 1
+    starts = np.concatenate([[0], cuts])
+    ends = np.concatenate([cuts, [len(s_type)]])
 
-    c60, _, v60 = win(60 * US)
-    _, s5m, v5m = win(300 * US)
-    _, s1h, v1h = win(3600 * US)
-    _, s30, _ = win(30 * US)
+    # per new event (sorted order): 60 s all-row count, 60 s non-null
+    # count, 5 m / 1 h value avgs, 30 s value sum, EWMA after the event
+    c60 = np.empty(n, dtype=np.int64)
+    v60 = np.empty(n, dtype=np.int64)
+    avg_5m = np.empty(n)
+    avg_1h = np.empty(n)
+    s30 = np.empty(n)
+    ew = np.empty(n)
+    r0 = 0
+    for a, b in zip(starts.tolist(), ends.tolist()):
+        new = s_new[a:b]
+        k = int(np.count_nonzero(new))
+        if not k:
+            continue
+        ts, val = s_ts[a:b], s_val[a:b]
+        # Null-value events (NaN) stay IN the buffer — they count toward the
+        # event rate (batch rate_1m counts all rows) — but are SKIPPED by the
+        # value aggregates, exactly like the batch twin's sum(v)/count(v): a
+        # raw cumsum would let one NaN poison every later window sum for the
+        # key (found by tests/test_fuzz_rules.py).
+        ok = ~np.isnan(val)
+        csum = np.concatenate([[0.0], np.cumsum(np.where(ok, val, 0.0))])
+        vcnt = np.concatenate([[0], np.cumsum(ok)])
+        q = ts[new]
+        upto = (b - a - k) + np.arange(1, k + 1)  # points processed so far, current included
+        # lower edges of the four windows, then the upper edge (ts <= q is ts < q + 1)
+        edges = np.searchsorted(ts, np.concatenate([(q - _WINDOWS_US[:, None]).ravel(), q + 1]))
+        edges = np.minimum(edges.reshape(5, k), upto)
+        lo60, lo5m, lo1h, lo30, hi = edges
+        out = slice(r0, r0 + k)
+        c60[out] = hi - lo60
+        v60[out] = vcnt[hi] - vcnt[lo60]
+        # batch: coalesce(sum(v)/count(v), 0.0) — empty value window → 0.0
+        for avg, lo in ((avg_5m, lo5m), (avg_1h, lo1h)):
+            cnt = vcnt[hi] - vcnt[lo]
+            avg[out] = np.where(cnt > 0, (csum[hi] - csum[lo]) / np.maximum(cnt, 1), 0.0)
+        s30[out] = csum[hi] - csum[lo30]
+
+        # R2's EWMA, updated with the current value first: the one true
+        # sequential dependency, with the same scalar arithmetic as the
+        # batch scan; null values leave it untouched
+        t = int(s_type[a])
+        e, he = ewma[t], has_ewma[t]
+        evals = []
+        for v in val[new].tolist():
+            if v == v:
+                e = v if not he else 0.1 * v + 0.9 * e
+                he = True
+                evals.append(e)
+            else:
+                evals.append(np.nan)
+        ew[out] = evals
+        ewma[t], has_ewma[t] = e, he
+        r0 += k
+
+    # prune every type's points to the horizon relative to its newest point
+    # (a no-op for types absent from the batch)
+    keep = s_ts >= np.repeat(s_ts[ends - 1], ends - starts) - HORIZON_US
+    state.update((
+        types, ewma, has_ewma,
+        s_type[keep].tolist(), s_ts[keep].tolist(), s_val[keep].tolist(),
+    ))
+
+    val = s_val[s_new]
     rate_1m = c60.astype(np.float64)
-    # batch: coalesce(sum(v)/count(v), 0.0) — empty value window → 0.0
-    avg_5m = np.where(v5m > 0, s5m / np.maximum(v5m, 1), 0.0)
-    avg_1h = np.where(v1h > 0, s1h / np.maximum(v1h, 1), 0.0)
-
     # R1 velocity spike
     thr1 = avg_5m * 3.0
     r1 = (rate_1m > thr1) & (rate_1m >= 20.0)
-
-    # R2 value spike: EWMA updated with the current value first.  The
-    # recurrence is the one true sequential dependency; loop over non-null
-    # values only with the same scalar arithmetic as the batch scan.
-    valid = ~np.isnan(n_val)
-    ew = np.full(n, np.nan)
-    if valid.any():
-        vidx = np.flatnonzero(valid)
-        evals = np.empty(len(vidx))
-        e, he = ewma, has_ewma
-        for j, v in enumerate(n_val[vidx].tolist()):
-            e = v if not he else 0.1 * v + 0.9 * e
-            he = True
-            evals[j] = e
-        ew[vidx] = evals
-        ewma, has_ewma = e, he
+    # R2 value spike; count_60s is the NON-NULL count, like the batch
+    # count(v) frame, and NaN comparisons are False
+    valid = ~np.isnan(val)
     thr2 = ew * 4.0
-    # count_60s is the NON-NULL count, like the batch count(v) frame
-    r2 = valid & (n_val > thr2) & (v60 >= 5)  # NaN comparisons are False
-
+    r2 = valid & (val > thr2) & (v60 >= 5)
     # R4 exfil (SASE only); empty value window → avg 0 → the 1000 floor
     p95 = np.maximum(np.floor(avg_1h * 10), 1000.0)
-    r4 = (profile == "SASE") & valid & (s30 > p95)
+    r4 = (batch["profile"].to_numpy()[src] == "SASE") & valid & (s30 > p95)
+    if not (r1.any() or r2.any() or r4.any()):
+        return
 
     idx = np.concatenate([np.flatnonzero(r1), np.flatnonzero(r2), np.flatnonzero(r4)])
     rules_a = np.concatenate([
@@ -160,41 +216,43 @@ def _eval_rules(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> It
     ])
     sev_a = np.concatenate([
         _sev_vec(rate_1m[r1], thr1[r1]),
-        _sev_vec(n_val[r2], thr2[r2]),
+        _sev_vec(val[r2], thr2[r2]),
         np.full(int(r4.sum()), "HIGH"),
     ])
     ordr = np.argsort(idx, kind="mergesort")  # event order; stable keeps R1<R2<R4 per event
-
-    # prune buffer to the horizon relative to the newest point
-    if len(all_ts):
-        keep = all_ts >= all_ts[-1] - HORIZON_US
-        state.update((all_ts[keep].tolist(), all_val[keep].tolist(), float(ewma), bool(has_ewma)))
-
+    rows = src[idx[ordr]]
     yield pd.DataFrame(
         {
             "rule": rules_a[ordr],
             "entity_id": entity_id,
-            "ts_ms": n_tsms[idx[ordr]],
+            "ts_ms": batch["ts_ms"].to_numpy(np.int64)[rows],
             "severity": sev_a[ordr],
-            "event_id": n_eid[idx[ordr]],
+            "event_id": n_eid[rows],
         },
         columns=["rule", "entity_id", "ts_ms", "severity", "event_id"],
     )
 
 
 def alert_rules_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
-    """Streaming R1/R2/R4 alerts over an entity-event stream.
+    """Streaming R1/R2/R4 alerts over an entity-event stream, keyed by
+    entity_id: one Python call per entity per micro-batch, whatever the
+    number of event types it carries (the per-group cost of
+    ``applyInPandasWithState``, not rows, bounds throughput).
 
-    Input needs: entity_id, type, profile, ts (timestamp), ts_us, ts_ms,
-    value, event_id.  Watermark bounds state and admits 120 s of lateness
-    (W2's drop tier, `cdp/runtime/CdpEventProcessor.kt:189-204`); pass
-    ``set_watermark=False`` when the stream already carries one (Spark
-    disallows redefining it)."""
+    Input needs: entity_id, type, profile, ts_us, ts_ms, value, event_id,
+    plus ts (timestamp) when ``set_watermark`` is on; only those seven
+    kernel columns reach the Python worker.  Watermark admits 120 s of
+    lateness (W2's drop tier, `cdp/runtime/CdpEventProcessor.kt:189-204`);
+    pass ``set_watermark=False`` when the stream already carries one (Spark
+    disallows redefining it).  The state schema is per entity: a
+    checkpoint written by the earlier (entity_id, type)-keyed operator
+    cannot be restored, so start such a query from a fresh checkpoint."""
     if set_watermark:
         entity_stream = entity_stream.withWatermark("ts", "120 seconds")
     return (
         entity_stream
-        .groupBy("entity_id", "type")
+        .select(*_RULE_INPUT)
+        .groupBy("entity_id")
         .applyInPandasWithState(
             _eval_rules,
             outputStructType=ALERT_SCHEMA,
@@ -289,8 +347,7 @@ def _eval_r3(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Itera
 
 def r3_stateful(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
     """Streaming R3 geo/device-mismatch alerts, keyed by entity_id (R3 spans
-    event types, so it cannot share alert_rules_stateful's (entity_id, type)
-    grouping).  Input needs: entity_id, type, profile, ts (timestamp),
+    event types).  Input needs: entity_id, type, profile, ts (timestamp),
     ts_us, ts_ms, event_id, geo, device."""
     if set_watermark:
         entity_stream = entity_stream.withWatermark("ts", "120 seconds")

@@ -28,7 +28,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
@@ -65,7 +65,7 @@ def histories(draw):
     eid = 0
     for e in range(n_entities):
         profile = draw(st.sampled_from(["SASE", "IGAMING"]))
-        n_types = draw(st.integers(1, 2))
+        n_types = draw(st.integers(1, 3))
         for t in range(n_types):
             n = draw(st.integers(3, 30))
             # bursty keys (tight gaps) make R1/R4 firings common — without
@@ -73,7 +73,10 @@ def histories(draw):
             # fuzz only exercises the negative path
             hi = draw(st.sampled_from([3, 20, 180]))
             gaps = draw(st.lists(st.integers(0, hi), min_size=n, max_size=n))
-            ts = BASE_US
+            # staggered starts: an entity's types go quiet at different
+            # times, so chunk cuts leave a type out of later chunks while
+            # its buffer and EWMA must survive the entity's other batches
+            ts = BASE_US + draw(st.sampled_from([0, 0, 900, 5400])) * 1_000_000
             for g in gaps:
                 ts += g * 1_000_000
                 rows.append(
@@ -82,14 +85,27 @@ def histories(draw):
                 )
                 eid += 1
     rows.sort(key=lambda r: (r[1], r[0]))  # global time order
-    n_chunks = draw(st.integers(1, 4))
+    n_chunks = draw(st.integers(1, 5))
     cuts = sorted(draw(st.lists(st.integers(0, len(rows)), min_size=n_chunks - 1,
                                 max_size=n_chunks - 1)))
     return rows, cuts
 
 
+def _returning_type_history(other="type1"):
+    """type0 builds a buffer and an EWMA of 1.0, sits out a chunk of
+    ``other`` events, then returns with an 8.0 that fires R2 only against
+    the kept state (EWMA 1.7, 7 values in 60 s); a reset slot would see
+    EWMA 8.0 and 1 value.  ``other=None`` makes the second type null, its
+    own key in the batch twin's partitioning."""
+    s = 1_000_000
+    rows = [(i, BASE_US + i * s, "ent0", "SASE", "type0", 1.0) for i in range(6)]
+    rows += [(6 + i, BASE_US + (10 + i) * s, "ent0", "SASE", other, 2.0) for i in range(5)]
+    rows += [(11, BASE_US + 30 * s, "ent0", "SASE", "type0", 8.0)]
+    return rows, [6, 11]
+
+
 def kernel_alerts(rows, cuts) -> set[tuple]:
-    """Replay time-ordered chunks through _eval_rules per key."""
+    """Replay time-ordered chunks through _eval_rules per entity."""
     bounds = [0, *cuts, len(rows)]
     states: dict = {}
     out = []
@@ -102,7 +118,7 @@ def kernel_alerts(rows, cuts) -> set[tuple]:
         )
         pdf["ts_ms"] = pdf["ts_us"] // 1000
         pdf["value"] = pdf["value"].astype("float64")
-        for key, grp in pdf.groupby(["entity_id", "type"], sort=False):
+        for key, grp in pdf.groupby(["entity_id"], sort=False):
             state = states.setdefault(key, FakeState())
             out.extend(_eval_rules(key, iter([grp]), state))
     if not out:
@@ -138,10 +154,13 @@ def _check_kernel_equals_batch(spark, hist):
 @settings(max_examples=4, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(hist=histories())
+@example(hist=_returning_type_history())
+@example(hist=_returning_type_history(other=None))
 def test_kernel_equals_batch_smoke(spark, hist):
-    """Fast pin (default gate): 4 random histories through the full
-    batch-vs-kernel equality; the 15-example profile runs in the slow
-    tier (each example pays a Spark batch job, ~2.5 s)."""
+    """Fast pin (default gate): 4 random histories plus the returning-type
+    histories through the full batch-vs-kernel equality; the 15-example
+    profile runs in the slow tier (each example pays a Spark batch job,
+    ~2.5 s)."""
     _check_kernel_equals_batch(spark, hist)
 
 

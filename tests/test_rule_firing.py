@@ -74,7 +74,7 @@ def test_duckdb_oracle_fires_same_set():
 
 @pytest.fixture
 def _small_state(spark):
-    """The firing fixture has exactly 3 keyed (entity, type) groups; the
+    """The firing fixture has exactly 3 keyed entity groups; the
     session default of one state partition per core just multiplies
     Python state-task overhead per micro-batch (the sized_session dial,
     SCALE.md 'Tuned visibility latency').  Fresh checkpoints bind the

@@ -328,6 +328,34 @@ def test_entity_alert_stream_facade(spark, sf_dir, tmp_path, small_state):
     assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
 
 
+def _plan_nodes(plan):
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _names(attrs) -> list[str]:
+    return [attrs.apply(i).name() for i in range(attrs.size())]
+
+
+def test_entity_alert_stream_rule_state_is_entity_keyed(spark, entity_chunks_dir):
+    """Plan guard: the rule operator makes one Python call per entity
+    (grouped by entity_id alone, not per (entity_id, type)), and only the
+    kernel's columns reach its Python worker — ts, geo and device would be
+    converted per group and never read."""
+    from pulseboard_spark.streaming.pipeline import entity_alert_stream
+
+    out, schema = entity_chunks_dir
+    stream = spark.readStream.schema(schema).parquet(f"{out}/chunk=*")
+    plan = entity_alert_stream(stream)._jdf.queryExecution().analyzed()
+    ops = [n for n in _plan_nodes(plan) if n.nodeName() == "FlatMapGroupsInPandasWithState"]
+    assert len(ops) == 1, [n.nodeName() for n in _plan_nodes(plan)]
+    assert _names(ops[0].groupingAttributes()) == ["entity_id"]
+    fed = set(_names(ops[0].child().output()))
+    assert "entity_id" in fed and not fed & {"ts", "geo", "device"}, sorted(fed)
+
+
 def test_r3_stateful_matches_batch(spark, sf_dir, entity_chunks_dir):
     """Streaming R3 (per-entity 2-min tag buffer in keyed state) emits
     exactly the batch r3_geo_device_eval rows on an in-order replay."""

@@ -5,10 +5,10 @@ SCALE.md claims `applyInPandasWithState` throughput is governed by the
 KEY-GROUP count per micro-batch (fixed per-group pandas overhead), not
 by row volume, and that bigger micro-batches amortize it.  This probe
 measures both dials on the rule engine (`alert_rules_stateful`, groups by
-(entity_id, type)):
+entity_id; each entity carries 3 event types as per-type sub-state):
 
 - fixed volume (N_EVENTS synthetic events, same value/time distribution),
-  key cardinality swept over N_KEYS_SWEEP — more groups at constant rows
+  entity cardinality swept over N_KEYS_SWEEP — more groups at constant rows
   should cost throughput if the per-group claim is true;
 - fixed cardinality, batch size swept via the number of files the replay
   exposes per `processAllAvailable` drain (1 file per trigger vs all at
@@ -115,8 +115,8 @@ def main() -> None:
     print("key-cardinality sweep (all files per trigger):")
     for k in N_KEYS_SWEEP:
         eps = run_case(k, None)
-        print(f"  {k:6d} (entity,type) key space: {eps:8.0f} eps", flush=True)
-    print("trigger-size sweep (7,500-key space):")
+        print(f"  {k:6d} entities: {eps:8.0f} eps", flush=True)
+    print("trigger-size sweep (7,500 entities):")
     for mf in [1, 2, N_FILES]:
         eps = run_case(7_500, mf)
         batch = N_EVENTS * mf // N_FILES
