@@ -15,8 +15,8 @@ Scale notes (100 TB posture):
     ``relational.value_stats_per_type``): a parallel ``stddev_samp`` has
     partition-order-dependent low bits; exact Σv/Σv² make every z-score
     reproducible across partitionings and engines.
-  * ``quantile_bins`` is ntile over a per-group sort — one shuffle on the
-    group key.  Equal-frequency bin EDGES could be computed from
+  * ``quantile_bins`` is an exact per-group ntile (two-level rank).
+    Equal-frequency bin EDGES could be computed from
     ``percentile`` without the full sort, but per-ROW bin assignment is
     the point here, and ntile's rank arithmetic is deterministic with the
     (value, id) tie-break where edge-interpolation binning is not.
@@ -128,20 +128,17 @@ def distributed_ntile(
     2. local rank within (group, bin): a window whose partitions are
        value-disjoint slices, each a tiny fraction of the group;
     3. per-(group, bin) counts (|groups|·bins rows, tiny) cumulated into
-       rank offsets with a window over that tiny table, broadcast back;
+       rank offsets with a window over that tiny table, broadcast back.
+       Both tiny tables join back on null-safe group keys, so a NULL key
+       is one group, as in ``ntile() OVER (PARTITION BY ...)``;
     4. bucket from the exact global rank r and group size n via ANSI
        ntile arithmetic (first n % k buckets take one extra row) —
        bit-identical to ``F.ntile`` and DuckDB ``ntile`` (pinned by
        test and by the value_deciles / rfm_scores oracles).
 
-    The r10 version range-partitioned on sampled boundaries, which made
-    partition ids depend on upstream row ORDER — unstable across
-    recomputation — and therefore had to pin the layout with an eager
-    ``localCheckpoint`` at plan-construction time (a per-build Spark job
-    that kept every caller out of the plan memo; r10 verdict item 5).
-    Every stage above is a deterministic function of row VALUES and
-    order-insensitive aggregates, so recomputation is stable with NO
-    checkpoint and NO sampling: construction runs zero jobs, the fact
+    Every stage is a deterministic function of row VALUES and
+    order-insensitive aggregates, so recomputation is stable with no
+    checkpoint and no sampling: construction runs zero jobs, the fact
     flows through one exchange (the (group, bin) window) plus two tiny
     aggregate passes, and every action recomputes from the source.
 
@@ -160,10 +157,13 @@ def distributed_ntile(
     fv = F.signum(F.col(lead).cast("double")) * F.log1p(F.abs(F.col(lead).cast("double")))
     is_nan = F.isnan(F.col(lead)) if lead_type in ("double", "float") else F.lit(False)
     base = df.withColumn("_fv", F.when(is_nan, F.lit(None)).otherwise(fv))
-    stats = base.groupBy(*by).agg(
-        F.min("_fv").alias("_lo"), F.max("_fv").alias("_hi")
-    )
-    joined = base.join(F.broadcast(stats), by) if by else base.crossJoin(F.broadcast(stats))
+    # The tiny tables carry the group keys under private names so the joins
+    # back can be null-safe: a NULL key is one group, as in PARTITION BY.
+    keys = [f"_by{i}" for i in range(len(by))]
+    grouped = [F.col(c).alias(k) for c, k in zip(by, keys)]
+    same_group = [F.col(c).eqNullSafe(F.col(k)) for c, k in zip(by, keys)]
+    stats = base.groupBy(*grouped).agg(F.min("_fv").alias("_lo"), F.max("_fv").alias("_hi"))
+    joined = base.join(F.broadcast(stats), same_group or None).drop(*keys)
     width = (F.col("_hi") - F.col("_lo")) / F.lit(float(NTILE_BINS))
     binned = joined.withColumn(
         "_bin",
@@ -188,20 +188,22 @@ def distributed_ntile(
         .cast("int"),
     ).drop("_fv", "_lo", "_hi")
 
-    counts = binned.groupBy(*by, "_bin").agg(F.count(F.lit(1)).alias("_c"))
-    gw = Window.partitionBy(*by) if by else Window.partitionBy()
+    counts = binned.groupBy(*grouped, F.col("_bin").alias("_b")).agg(F.count(F.lit(1)).alias("_c"))
+    gw = Window.partitionBy(*keys)
     offsets = counts.select(
-        *by,
-        "_bin",
+        *keys,
+        "_b",
         F.coalesce(
-            F.sum("_c").over(gw.orderBy("_bin").rowsBetween(Window.unboundedPreceding, -1)),
+            F.sum("_c").over(gw.orderBy("_b").rowsBetween(Window.unboundedPreceding, -1)),
             F.lit(0),
         ).alias("_off"),
         F.sum("_c").over(gw.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).alias("_n"),
     )
     wloc = Window.partitionBy(*by, "_bin").orderBy(*[F.asc(c) for c in order_cols])
-    local = binned.join(F.broadcast(offsets), [*by, "_bin"]).withColumn(
-        "_lr", F.row_number().over(wloc)
+    local = (
+        binned.join(F.broadcast(offsets), [*same_group, F.col("_bin") == F.col("_b")])
+        .drop(*keys, "_b")
+        .withColumn("_lr", F.row_number().over(wloc))
     )
 
     # ANSI ntile from the exact global rank r = _off + _lr: with n rows and
@@ -246,7 +248,7 @@ def quantile_bins(
 def value_decile_profile(ev: DataFrame) -> DataFrame:
     """Per (type, decile) population and value range — the compact,
     query-shaped face of :func:`quantile_bins`.  Projects to the three
-    needed columns first so the ranked checkpoint stays narrow."""
+    needed columns first so the ranked rows stay narrow."""
     binned = quantile_bins(
         ev.select("type", "value", "event_id"), "value", ["type"], 10, "decile"
     )
@@ -405,30 +407,28 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
     into ``n_tiles`` buckets, plus the concatenated RFM segment label —
     the classic CDP-to-ML feature block.
 
-    One fact shuffle (the per-entity aggregate); the scoring routes on the
-    entity count — a small entity table takes the plain window ntile (one
-    task over a small table beats the two-level rank's extra stages), a
-    large one the exact :func:`distributed_ntile` two-level rank — a plain
-    ``ntile`` over ``Window.orderBy`` would gather every entity into ONE
-    partition, the 100 TB scale-killer for a 1e8+-entity corpus.  Both
-    paths are the same ANSI arithmetic (equivalence pinned by
-    ``test_distributed_ntile_matches_window_ntile``), and every ranking
-    carries an entity_id tie-break so equal metrics score identically on
-    any engine or partitioning.
+    One fact shuffle (the per-entity aggregate), then the scoring routes
+    on the entity count.  Up to :data:`MAX_SINGLE_PARTITION_RANK_ROWS`
+    entities it runs three plain window ntiles: one task over a small
+    table beats the two-level rank's extra stages.  Above it, where a
+    ``Window.orderBy`` ntile would gather every entity into ONE
+    partition, the aggregate unpivots to ``(entity_id, _m, _v)`` rows,
+    ONE :func:`distributed_ntile` call ranks each metric ``_m`` as its
+    own group, and one ``groupBy("entity_id")`` folds the scores back —
+    no single-partition exchange, one copy of the stats / counts /
+    offsets machinery.  Both routes are the same ANSI arithmetic (pinned
+    equal by ``test_distributed_path_matches_window_path``), and every
+    ranking carries an entity_id tie-break so equal metrics score
+    identically on any engine or partitioning.
 
-    r11 (verdict item 5): the per-build ``localCheckpoint`` + count probe
-    are gone.  The rankings are pure functions of the aggregate's
-    deterministic MULTISET (total-order tie-breaks make row order
-    irrelevant), and the two-level rank no longer needs a pinned layout
-    (deterministic value binning — see :func:`distributed_ntile`), so no
-    materialization is required for correctness; the routing count is a
-    session-memoized size probe (similarity's ``_plan_probe`` pattern —
-    one count job on first construction, plan-only after).  Construction
-    is job-free on every later build, every action recomputes from the
+    Nothing is materialized: the rankings are pure functions of the
+    aggregate's multiset, the routing count is a session-memoized size
+    probe (similarity's ``_plan_probe`` pattern — one count job on first
+    construction, plan-only after), every action recomputes from the
     source, and the query is plan-memoizable.
     """
     from pulseboard_spark.operators.similarity import _plan_probe
-    agg = ev.groupBy("entity_id").agg(
+    base = ev.groupBy("entity_id").agg(
         F.max("ts_ms").alias("last_ms"),
         F.count(F.lit(1)).alias("n_events"),
         # decimal-exact sum cast straight to double — unrounded, since both
@@ -436,33 +436,29 @@ def rfm_scores(ev: DataFrame, n_tiles: int = 5) -> DataFrame:
         # the cross-engine half-case drift class that failed round 1
         F.sum(F.col("value").cast("decimal(27,6)")).cast("double").alias("total_value"),
     ).withColumn("total_value", F.coalesce(F.col("total_value"), F.lit(0.0)))
-    base = agg
+    metrics = {"r_score": "last_ms", "f_score": "n_events", "m_score": "total_value"}
     if _plan_probe(base, "rfm:n_entities", base.count) <= MAX_SINGLE_PARTITION_RANK_ROWS:
         t = lambda col: F.ntile(n_tiles).over(  # noqa: E731
             Window.orderBy(F.asc(col), F.asc("entity_id"))
         ).cast("int")
-        scored = base.select(
-            "entity_id", "last_ms", "n_events", "total_value",
-            t("last_ms").alias("r_score"),
-            t("n_events").alias("f_score"),
-            t("total_value").alias("m_score"),
-        )
+        scored = base.select("entity_id", *metrics.values(), *[t(c).alias(m) for m, c in metrics.items()])
     else:
-        scored = distributed_ntile(base, ["last_ms", "entity_id"], n_tiles, "r_score")
-        scored = distributed_ntile(scored, ["n_events", "entity_id"], n_tiles, "f_score")
-        scored = distributed_ntile(scored, ["total_value", "entity_id"], n_tiles, "m_score")
-        scored = scored.select(
-            "entity_id", "last_ms", "n_events", "total_value",
-            "r_score", "f_score", "m_score",
+        # one (entity_id, _m, _v) row per metric; the double cast is exact
+        # (and casts back exactly) because last_ms and n_events are < 2^53
+        long = base.select(
+            "entity_id",
+            F.explode(F.array(*[
+                F.struct(F.lit(m).alias("_m"), F.col(c).cast("double").alias("_v"))
+                for m, c in metrics.items()
+            ])).alias("_p"),
+        ).select("entity_id", "_p.*")
+        ranked = distributed_ntile(long, ["_v", "entity_id"], n_tiles, "_s", by=["_m"])
+        pick = lambda m, c: F.max(F.when(F.col("_m") == m, F.col(c)))  # noqa: E731
+        scored = ranked.groupBy("entity_id").agg(
+            *[pick(m, "_v").cast(dict(base.dtypes)[c]).alias(c) for m, c in metrics.items()],
+            *[pick(m, "_s").alias(m) for m in metrics],
         )
-    return scored.withColumn(
-        "rfm",
-        F.concat(
-            F.col("r_score").cast("string"),
-            F.col("f_score").cast("string"),
-            F.col("m_score").cast("string"),
-        ),
-    )
+    return scored.withColumn("rfm", F.concat(*[F.col(m).cast("string") for m in metrics]))
 
 
 def value_drift_psi(

@@ -144,12 +144,12 @@ def _value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed out of the full silver IMTS (measured: the scan+filter stage
     is the dominant task-time term of ``ewma``).  One shared slice pays
     the filter once per session.  Only queries whose ENTIRE input is the
-    non-null slice ride it; anything that also counts null-value rows
+    non-null slice ride it (``value_deciles`` among them: its binning
+    drops NULL values first); anything that also counts null-value rows
     (R2's count_60s, rfm_scores' n_events, value_stats_per_type,
-    value_decile_profile's null-bucketed ntile, seasonal/weekly counts)
-    keeps the full silver.  Same dual posture as the other silvers: at
-    100 TB this is a predicate-pushed scan of the silver table, not a
-    cache."""
+    seasonal/weekly counts) keeps the full silver.  Same dual posture as
+    the other silvers: at 100 TB this is a predicate-pushed scan of the
+    silver table, not a cache."""
     if not _silver_cache_enabled():
         return _entity_events_raw(spark, sf_dir).filter(F.col("value").isNotNull())
     return _cached_memo(

@@ -619,63 +619,6 @@ def transitions_stateful(entity_stream: DataFrame, set_watermark: bool = True) -
     )
 
 
-def transitions_stateful_tws(entity_stream: DataFrame, set_watermark: bool = True) -> DataFrame:
-    """The transition pair emitter on `transformWithStateInPandas` — the
-    current-generation stateful API (typed per-key state handles, RocksDB
-    provider required).  Semantics identical to
-    :func:`transitions_stateful`; pinned equal by
-    ``test_transitions_tws_matches_legacy_and_batch``.  Kept alongside the
-    `applyInPandasWithState` twin as the migration template for the rest
-    of this file: ValueState replaces the monolithic state tuple, and the
-    runtime owns timers/TTL instead of the handler.
-
-    Environment note: the transformWithState Python worker speaks a
-    protobuf state-server protocol, so running it needs `google.protobuf`
-    (absent in this sandbox — the equivalence test skips cleanly there,
-    exactly like the Kafka e2e; the operator itself is import-clean).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Transitions(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState("last", "last_type string")
-
-        def handleInputRows(self, key, rows, timer_values):
-            batch = pd.concat(list(rows), ignore_index=True).sort_values(
-                ["ts_ms", "event_id"], kind="mergesort"
-            )
-            prev = self._last.get()[0] if self._last.exists() else None
-            out_from, out_to = [], []
-            for t in batch["type"].tolist():
-                if prev is not None:
-                    out_from.append(prev)
-                    out_to.append(t)
-                prev = t
-            self._last.update((str(batch.iloc[-1]["type"]),))
-            if out_from:
-                ts = batch["ts_ms"].tolist()[-len(out_from):]
-                yield pd.DataFrame({"from_type": out_from, "to_type": out_to, "ts_ms": ts})
-
-        def close(self) -> None:
-            pass
-
-    if set_watermark:
-        entity_stream = entity_stream.withWatermark("ts", "120 seconds")
-    return (
-        entity_stream.select("entity_id", "type", "ts", "ts_ms", "event_id")
-        .groupBy("entity_id")
-        .transformWithStateInPandas(
-            _Transitions(),
-            outputStructType=TRANSITION_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 CUSUM_ALARM_SCHEMA = (
     "entity_id string, type string, ts_ms bigint, event_id bigint, "
     "direction string, cusum_micro bigint"

@@ -209,32 +209,6 @@ def test_connected_components_order_independent(spark):
     assert c1 == c2 == {"b": "b", "c": "b", "d": "b"}
 
 
-def test_star_contraction_matches_propagation(spark):
-    """large-star/small-star CC (the high-diameter scale path) must equal
-    the min-label propagation twin, and converge logarithmically on a
-    chain — the exact shape propagation-without-halving handles worst."""
-    import random
-
-    from pulseboard_spark.operators.identity import connected_components_star
-
-    # chain fixture: 0-1-2-…-63 (diameter 63) plus a random component mix
-    chain = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(63)]
-    rng = random.Random(11)
-    extra = [(f"m{rng.randrange(40)}", f"m{rng.randrange(40)}") for _ in range(60)]
-    edges = spark.createDataFrame(chain + extra, "a string, b string")
-    ids = sorted({x for e in chain + extra for x in e} | {"iso"})
-    nodes = spark.createDataFrame([(i,) for i in ids], "id string")
-
-    stats: dict = {}
-    got = {r.id: r.component for r in connected_components_star(nodes, edges, stats=stats).collect()}
-    want = {r.id: r.component for r in connected_components(nodes, edges).collect()}
-    assert got == want
-    assert got["iso"] == "iso"
-    # star contraction halves star-height per paired round: a 64-node chain
-    # must close in O(log n) rounds, nowhere near the diameter
-    assert stats["rounds"] <= 10, stats
-
-
 def test_salted_agg_matches_direct(spark):
     """Salted two-phase aggregation must equal direct groupBy on skewed data."""
     from pulseboard_spark.operators.skew import salted_agg

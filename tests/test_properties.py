@@ -265,31 +265,45 @@ def test_quantile_bins_match_ntile_model(spark):
 
 
 def test_distributed_ntile_matches_window_ntile(spark):
-    """The two-level rank (range partition + per-partition row_number +
-    offset join) must reproduce F.ntile over a global window EXACTLY —
-    including the ANSI first-(n%k)-buckets-get-one-extra arithmetic —
-    on data spread across many input partitions, for several k and n
-    (n < k, n % k == 0, and ragged)."""
+    """The two-level rank (value bins + per-bin row_number + offset join)
+    must reproduce F.ntile over a window EXACTLY — including the ANSI
+    first-(n%k)-buckets-get-one-extra arithmetic — on data spread across
+    many input partitions, for several k and n (n < k, n % k == 0, and
+    ragged), and on the inputs the binning special-cases: NULL and NaN
+    leads, ±inf, a constant column, a NULL group key (its own group, as
+    in PARTITION BY) and a group whose rows are 95% one value."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from pulseboard_spark.operators.mlprep import distributed_ntile
 
     rng = random.Random(7)
-    for n_rows, k in [(3, 7), (64, 8), (501, 5), (200, 3)]:
-        rows = [(i, float(rng.randint(0, 9))) for i in range(n_rows)]
-        df = spark.createDataFrame(rows, "entity_id long, v double").repartition(13)
+    nan, inf = float("nan"), float("inf")
+    draw = lambda n, vals: [(i, "a", rng.choice(vals)) for i in range(n)]  # noqa: E731
+    cases = [
+        (draw(n_rows, [float(v) for v in range(10)]), k, [])
+        for n_rows, k in [(3, 7), (64, 8), (501, 5), (200, 3)]
+    ] + [
+        (draw(97, [None, nan, -1.5, 0.0, 2.0, 1e6]), 4, []),
+        (draw(61, [-inf, inf, -3.0, 0.5, 7.0]), 5, []),
+        (draw(23, [3.0]), 4, []),
+        ([(i, rng.choice(["a", "b", None]), float(rng.randint(0, 5))) for i in range(60)], 4, ["g"]),
+        ([(i, "a", 1.0 if i % 20 else rng.uniform(-5, 5)) for i in range(400)]
+         + [(400 + i, "b", float(i)) for i in range(30)], 6, ["g"]),
+    ]
+    for rows, k, by in cases:
+        df = spark.createDataFrame(rows, "entity_id long, g string, v double").repartition(13)
         got = {
             (r.entity_id, r.b)
-            for r in distributed_ntile(df, ["v", "entity_id"], k, "b").collect()
+            for r in distributed_ntile(df, ["v", "entity_id"], k, "b", by=by).collect()
         }
         want = {
             (r.entity_id, r.b)
             for r in df.withColumn(
-                "b", F.ntile(k).over(Window.orderBy("v", "entity_id"))
+                "b", F.ntile(k).over(Window.partitionBy(*by).orderBy("v", "entity_id"))
             ).collect()
         }
-        assert got == want, (n_rows, k)
+        assert got == want, (len(rows), k, by, rows[:3])
 
 
 # --- SCD2 intervals vs a sequential Python model ----------------------------

@@ -894,68 +894,6 @@ def test_streaming_transitions_match_batch(spark, sf_dir, entity_chunks_dir):
     assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf (state-server "
-    "protocol) — not shipped in this environment; operator is import-clean "
-    "and the applyInPandasWithState twin covers the semantics",
-)
-def test_transitions_tws_matches_legacy_and_batch(spark, sf_dir, entity_chunks_dir):
-    """The transformWithStateInPandas twin (current-gen API, RocksDB
-    provider) must reproduce the batch Markov matrix exactly, like the
-    applyInPandasWithState twin."""
-    from pulseboard_spark.operators.timeseries import event_transitions
-    from pulseboard_spark.streaming.pipeline import ROCKSDB_PROVIDER, use_rocksdb_state
-    from pulseboard_spark.streaming.stateful import transitions_stateful_tws
-
-    out, schema = entity_chunks_dir
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    assert spark.conf.get("spark.sql.streaming.stateStore.providerClass") == ROCKSDB_PROVIDER
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{out}/chunk=*")
-        )
-        q = (
-            transitions_stateful_tws(stream)
-            .writeStream.format("memory")
-            .queryName("stream_transitions_tws")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-    got = {
-        (r.from_type, r.to_type): r.n
-        for r in spark.sql(
-            "SELECT from_type, to_type, count(*) AS n FROM stream_transitions_tws GROUP BY 1, 2"
-        ).collect()
-    }
-    want = {
-        (r.from_type, r.to_type): r.n
-        for r in event_transitions(entity_events(spark, sf_dir)).collect()
-    }
-    assert got == want and got, f"empty or diverged: got={sorted(got)[:5]}"
-
-
 def test_streaming_cusum_matches_batch(spark, sf_dir, entity_chunks_dir, small_state):
     """Streaming CUSUM alarms (batch-trained params, O(1) keyed state)
     must reproduce the batch operator's per-key alarm counts exactly
